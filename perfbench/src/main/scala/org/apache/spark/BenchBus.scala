@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Access to the listener bus, which Spark keeps package-private. */
+object BenchBus {
+
+  /** Block until every queued listener event has been delivered. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
